@@ -4,6 +4,8 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, IntegerType, StringType}
 
@@ -58,6 +60,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Map-side combine under an explicit repartition. Spark runs the
+    // post-planner hook only inside adaptive execution (before its
+    // EnsureRequirements); without AQE the same rule runs as a
+    // pre-columnar rule, after EnsureRequirements, which adds nothing to
+    // the matched shape. Under AQE that second hook sees only query
+    // stages, never a bare exchange, so it matches nothing there.
+    ext.injectQueryPostPlannerStrategyRule(_ => PartialAggregateBeforeRepartition)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = PartialAggregateBeforeRepartition
+    })
     ext.injectFunction((FunctionIdentifier("minhash_signature"),
       info("minhash_signature", "minhash_signature(hashes, k) - k-slot MinHash signature of an array<bigint>"),
       (args: Seq[Expression]) => {

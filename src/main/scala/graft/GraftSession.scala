@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** One place to assemble the engine's SparkSession configuration so the
@@ -39,19 +41,20 @@ object GraftSession {
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "zstd"))
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The audited bounded global windows carry a constant partition
-      // key (`partitionBy(lit(0))` — one partition by DESIGN, over
-      // frames bounded by construction; see the r17 window audit).
-      // Spark 4's EliminateWindowPartitions folds foldable partition
-      // keys away again, which re-empties the partition spec and makes
-      // WindowExec warn "No Partition Defined" on every such site at
-      // runtime. Excluding the rule keeps the declared constant key in
-      // the plan: the executed exchange is the same single partition
-      // either way, but the spec stays visibly bounded and the
-      // spurious warning is gone.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
       .config("spark.ui.enabled", "false")
+
+  /** WARN and above, except WindowExec's "No Partition Defined": the
+    * audited bounded global windows (post-limit ranks, bucket-total
+    * offsets, vocab-top-K ids; see the r17 window audit) run
+    * unpartitioned by design and would fire it on every run. Raising
+    * that one logger keeps every other warning and leaves the
+    * optimizer's rules as they are. Call after the session exists:
+    * Spark installs its log configuration while the context starts. */
+  def logWarnings(s: SparkSession): SparkSession = {
+    s.sparkContext.setLogLevel("WARN")
+    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
+    s
+  }
 
   /** Session for the driver-facing mains: `local[$SPARK_GRAFT_CPUS]`.
     * Shuffle partitions default to 3× the core count: multiple waves of
@@ -62,10 +65,8 @@ object GraftSession {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val parts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTS").map(_.toInt)
       .getOrElse(cpus * 3)
-    val s = builder(s"local[$cpus]", shufflePartitions = parts)
+    logWarnings(builder(s"local[$cpus]", shufflePartitions = parts)
       .appName(appName)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      .getOrCreate())
   }
 }

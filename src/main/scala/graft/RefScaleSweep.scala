@@ -36,10 +36,10 @@ object RefScaleSweep {
       .split(",").map(_.trim.toInt).toSeq
     val loadStart = Bench.loadavgJson()
     val points = cores.map { c =>
-      val spark = GraftSession.builder(s"local[$c]", shufflePartitions = c * 3)
-        .appName(s"graft-refscale-sweep-$c")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.logWarnings(
+        GraftSession.builder(s"local[$c]", shufflePartitions = c * 3)
+          .appName(s"graft-refscale-sweep-$c")
+          .getOrCreate())
       def run(): Double = {
         val t0 = System.nanoTime()
         ReferenceHypercube.writeCsv(

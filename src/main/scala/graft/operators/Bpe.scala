@@ -551,8 +551,7 @@ object Bpe {
     * argument). */
   def subwordIds(vocab: DataFrame): DataFrame =
     vocab.select(col("subword"), row_number().over(
-      Window.partitionBy(lit(0))
-        .orderBy(col("n").desc, col("subword").asc)).as("tid"))
+      Window.orderBy(col("n").desc, col("subword").asc)).as("tid"))
 
   /** Encode `corpus` as subword-id sequences under a learned tokenizer:
     * (doc_id, n_words, n_subwords, ids) with `ids` the space-joined id

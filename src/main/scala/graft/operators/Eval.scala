@@ -97,7 +97,7 @@ object Eval {
     //    windows (input = distinct scores, never documents)
     val bucketTotals = groups.groupBy("b").agg(sum("nneg").as("bneg"))
     val bucketOffsets = bucketTotals.withColumn("boff",
-      coalesce(sum("bneg").over(Window.partitionBy(lit(0)).orderBy("b")
+      coalesce(sum("bneg").over(Window.orderBy("b")
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select("b", "boff")
     val inBucket = Window.partitionBy("b").orderBy("s")

@@ -18,15 +18,16 @@ import graft.sources.FixedWidthBinary
   *
   * Where the reference hand-builds a perfect-hash dense aggregation array
   * (`ETL.java:35,109,153`), thread-local partials and coarse merge locks
-  * (`ETL.java:130-132,181-192`), the Spark plan gets the same shape for
-  * free: two broadcast hash joins (clients then the denormalized contract
+  * (`ETL.java:130-132,181-192`), the Spark plan gets the same shape:
+  * two broadcast hash joins (clients then the denormalized contract
   * dim are both tiny relative to the fact), then
-  * partial-HashAggregate → shuffle → final-HashAggregate with `Expand`
-  * for the two exact distincts. At 100 TB the fact side streams through
-  * executors with only the small dimension broadcast replicated; the one
-  * shuffle is on the 5-dim group key whose cardinality is bounded at
-  * 3,121,200 groups (`ETL.java:33-35`), so the final aggregate is tiny
-  * regardless of fact size.
+  * partial-HashAggregate → shuffle → final-HashAggregate, with the two
+  * exact distincts turned into plain counts (see [[hypercube]]). At
+  * 100 TB the fact side streams through executors with only the small
+  * dimension broadcast replicated; the one shuffle is on the 5-dim group
+  * key whose cardinality is bounded at 3,121,200 groups
+  * (`ETL.java:33-35`), so the final aggregate is tiny regardless of fact
+  * size.
   *
   * Semantics choices (SURVEY.md §7.4):
   *   - SQL inner-join semantics: a dangling FK drops the row (the
@@ -83,26 +84,6 @@ object ReferenceHypercube {
         col("k.nature").as("nature"), col("c.type").as("type"),
         col("c.geo").as("geo"), col("c.misc").as("misc"))
 
-  /** J2 + A1–A6 + P3 + O1: two-phase aggregation exploiting the same
-    * functional dependencies the reference does (`ETL.java:226-252`,
-    * SURVEY.md §4 "COUNT(DISTINCT) sharing"):
-    *
-    *  1. pre-aggregate the fact by its natural key (contract, time) —
-    *     a plain hash aggregate, partials combined map-side, shrinking
-    *     the stream before the join (57.6 M invoices → ≤ |contracts|×36
-    *     rows at reference shape);
-    *  2. join the reduced stream against the denormalized dim and run
-    *     the 5-dim final aggregate. Because contract determines
-    *     (geo,type,misc,nature), every pre-aggregated row is a distinct
-    *     contract within its output group — `ncontrats` becomes a plain
-    *     COUNT(*), and only the client distinct remains. A single
-    *     distinct aggregate needs no `Expand`, so the naive plan's 3×
-    *     row multiplication over the full fact stream disappears
-    *     (measured 2.4× end-to-end at reference scale).
-    *
-    * Empty groups never materialize (hash aggregate only creates touched
-    * groups — the reference needs an explicit `!= 0` filter only because
-    * its dense array pre-materializes all 3.1 M slots, `ETL.java:265`). */
   /** Amount-precision modes (SURVEY.md §7.2 M3): the reference
     * accumulates float32 amounts in double (`ETL.java:126,150,38`) —
     * fast, but low-order bits depend on addition order; SQL-exact mode
@@ -114,13 +95,9 @@ object ReferenceHypercube {
   /** SQL-exact: `DECIMAL(10,2)` inputs, exact decimal accumulation. */
   case object SqlExact extends AmountMode
 
-  /** Round-3 plan (replaces the r2 three-exchange shape): broadcast-join
-    * the fact against the dim FIRST, then ONE hash repartition on the
-    * five output dimensions, then three chained aggregation levels that
-    * all run in-partition — `HashPartitioning(geo,type,misc,nature,time)`
-    * satisfies the `ClusteredDistribution` of every level because each
-    * grouping key is a superset of the partitioning expressions, so
-    * Catalyst inserts no further exchange:
+  /** Broadcast-join the fact against the dim first, then ONE hash
+    * repartition on the five output dimensions, then three chained
+    * aggregation levels:
     *
     *  1. (dims, contract, client): collapses the invoice stream to one
     *     row per contract×time (client rides along — it is functionally
@@ -130,12 +107,18 @@ object ReferenceHypercube {
     *  3. (dims): `count(*)` = distinct clients (level 2 made rows
     *     client-unique within each group), `sum` = distinct contracts.
     *
-    * The r2 plan shuffled three times (pre-agg on (contract,time) ~36 M
-    * rows, then Spark's single-distinct rewrite added exchanges on
-    * (dims, client) and (dims)); this shuffles once, and the distinct
-    * counts cost no Expand and no extra exchange at any scale — the
-    * executor-side hash maps stay bounded by the per-partition slice of
-    * (contract × time), the same working set the r2 pre-aggregate had. */
+    * Level 1's partial aggregate runs map-side, in front of the exchange
+    * ([[graft.PartialAggregateBeforeRepartition]]): each map task ships
+    * one row per level-1 key it saw instead of one per invoice — the
+    * reference's thread-local partial arrays, merged at the end
+    * (`ETL.java:130-132,181-192`). The exchange's hash partitioning on
+    * the dims meets the `ClusteredDistribution` of level 1's final
+    * aggregate and of levels 2 and 3, since every grouping key is a
+    * superset of the partitioning expressions, so Catalyst adds no
+    * further exchange and the distinct counts cost no `Expand`. Empty
+    * groups never materialize: a hash aggregate creates only touched
+    * groups, where the reference filters its dense array for `!= 0`
+    * (`ETL.java:265`). */
   def hypercube(clients: DataFrame, contracts: DataFrame, invoices: DataFrame,
       amountMode: AmountMode = ReferenceExact,
       broadcastDim: Boolean = false): DataFrame = {
@@ -188,21 +171,6 @@ object ReferenceHypercube {
       .orderBy(dims: _*)
   }
 
-  /** Bit-packed variant of [[chainedPlan]] — same three levels, but the
-    * grouping keys are packed into single longs so each hash-aggregate
-    * pass hashes/compares 2–3 numeric fields instead of 5–7 (measured
-    * ~2× on the aggregation stages, which dominate at reference scale):
-    *
-    *   - `g`  = geo‖type‖misc‖nature, power-of-two strides (pure
-    *     shifts/ors — no overflow, order-preserving, bijective);
-    *   - `cc` = client‖contract; the level-2 client key is `cc >>`
-    *     the contract bit width.
-    *
-    * The bit widths come from a one-off aggregate over the (broadcastable,
-    * hence tiny) dim table — the same cheap statistics pass any
-    * cost-based planner runs. Returns None (→ generic fallback) when the
-    * dim has NULL or negative keys or the packed widths overflow a long;
-    * `time` stays unpacked, so fact-side values are unconstrained. */
   /** Driver-side memo of the dim-statistics row — the stats job is
     * deterministic for a given input, and callers (bench loops, retries)
     * rebuild the same plan many times. Same spirit as Spark's own
@@ -249,6 +217,26 @@ object ReferenceHypercube {
       count(col("geo")) + count(col("type")) + count(col("misc")) +
         count(col("nature")) + count(col("client")) + count(col("contract_id"))).head()
 
+  /** Bit-packed variant of [[chainedPlan]] — same three levels, but the
+    * grouping keys are packed into single longs so each hash-aggregate
+    * pass hashes/compares 2–3 numeric fields instead of 5–7 (measured
+    * ~2× on the aggregation stages, which dominate at reference scale):
+    *
+    *   - `g`  = geo‖type‖misc‖nature, power-of-two strides (pure
+    *     shifts/ors — no overflow, order-preserving, bijective);
+    *   - `cc` = client‖contract; the level-2 client key is `cc >>`
+    *     the contract bit width.
+    *
+    * The bit widths come from a one-off aggregate over the (broadcastable,
+    * hence tiny) dim table — the same cheap statistics pass any
+    * cost-based planner runs. Returns None (→ generic fallback) when the
+    * dim has NULL or negative keys or the packed widths overflow a long;
+    * `time` stays unpacked, so fact-side values are unconstrained.
+    *
+    * The one exchange hashes (g, time); level 1's partial aggregate on
+    * (g, time, cc) runs before it, so the exchange carries at most one
+    * row per (g, time, cc) key per map task — bounded by contracts ×
+    * time — rather than one row per invoice. */
   private def packedPlan(dim: DataFrame, joined: DataFrame): Option[DataFrame] = {
     val s = dimStatsCached(dim)
     val n = s.getLong(12)

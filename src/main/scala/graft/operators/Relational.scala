@@ -268,10 +268,12 @@ object Relational {
       "q4_hypercube",
       "The flagship shape on the test schema: 3-table join + 5-dim GROUP BY with " +
         "SUM×2, exact COUNT(DISTINCT)×2, COUNT(*) — the direct analog of " +
-        "hypercube.sql:1-14. Planned as ONE hash repartition on the output dims " +
-        "followed by three chained in-partition aggregation levels (order → " +
-        "customer → group): each level's grouping keys are a superset of the " +
-        "partitioning, so no further exchange exists, and both exact distincts " +
+        "hypercube.sql:1-14. Planned as three chained aggregation levels (order → " +
+        "customer → group) around ONE hash repartition on the output dims: the " +
+        "order level's partial aggregate combines map-side before the exchange, " +
+        "so it ships one row per order key a task saw instead of every line; each " +
+        "level's grouping keys are a superset of the partitioning, so no further " +
+        "exchange exists, and both exact distincts " +
         "become plain counts with no Expand — the order row structurally carries " +
         "exactly one customer key, the same FD the reference's per-group distinct " +
         "sets exploit (ETL.java:159-174,216-252).",

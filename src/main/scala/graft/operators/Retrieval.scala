@@ -47,8 +47,7 @@ object Retrieval {
       .orderBy(col("score").desc, col("doc_id"))
       .limit(nCand)
     cut.withColumn("kw_rank",
-      row_number().over(Window.partitionBy(lit(0))
-        .orderBy(col("score").desc, col("doc_id")))
+      row_number().over(Window.orderBy(col("score").desc, col("doc_id")))
         .cast("int"))
       .select(col("doc_id"), col("kw_rank"))
   }
@@ -68,8 +67,7 @@ object Retrieval {
       .orderBy(col("score").desc, col("vec_id"))
       .limit(nCand)
     cut.withColumn("vec_rank",
-      row_number().over(Window.partitionBy(lit(0))
-        .orderBy(col("score").desc, col("vec_id")))
+      row_number().over(Window.orderBy(col("score").desc, col("vec_id")))
         .cast("int"))
       .select(col("vec_id"), col("vec_rank"))
   }

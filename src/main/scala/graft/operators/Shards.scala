@@ -94,8 +94,7 @@ object Shards {
       .agg(sum("__w").as("__ptotal"))
       .withColumn("__poffset",
         coalesce(sum("__ptotal").over(
-          Window.partitionBy(lit(0)).orderBy("__pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+          Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select("__pid", "__poffset")
     val local = Window.partitionBy("__pid").orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

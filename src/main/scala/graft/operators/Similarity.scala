@@ -500,7 +500,7 @@ object Similarity {
         s => slice(col("u"), s * subdim + 1, lit(subdim)))).as(Seq("sub", "sv")))
     val seeds = train.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
       .withColumn("cid", row_number().over(
-        Window.partitionBy(lit(0)).orderBy(xxhash64(col("vec_id")), col("vec_id"))) - 1)
+        Window.orderBy(xxhash64(col("vec_id")), col("vec_id"))) - 1)
       .select(col("cid"), posexplode(transform(sequence(lit(0), lit(m - 1)),
         s => slice(col("u"), s * subdim + 1, lit(subdim)))).as(Seq("sub", "c_sv")))
       .persist()

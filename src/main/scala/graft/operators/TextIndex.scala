@@ -162,7 +162,6 @@ object TextIndex {
   private def rankedBm25(ranked: DataFrame): DataFrame =
     ranked.withColumn("rank",
         row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(lit(0))
           .orderBy(col("score").desc, col("doc_id"))).cast("int"))
       .select("doc_id", "rank", "n_terms", "tf_sum", "dl")
       .orderBy("rank")

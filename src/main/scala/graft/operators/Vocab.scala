@@ -180,8 +180,7 @@ object Vocab {
   def vocabIds(vocab: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     vocab.select(col("token"), row_number().over(
-      Window.partitionBy(lit(0))
-        .orderBy(col("df").desc, col("token").asc)).as("tid"))
+      Window.orderBy(col("df").desc, col("token").asc)).as("tid"))
   }
 
   /** Token-id encoding — the tokenizer-emit stage between curation and

@@ -20,7 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * What V2 buys over the `binaryRecords` RDD path:
   *   - **splits + statistics reported to Catalyst**: record-aligned input
-  *     partitions of a declared target size, and exact `sizeInBytes` /
+  *     partitions sized from the file and the core count (or a declared
+  *     `targetSplitBytes`), and exact `sizeInBytes` /
   *     `numRows` estimates (`SupportsReportStatistics`) so join-strategy
   *     and AQE decisions see real numbers instead of defaults;
   *   - **column pruning pushdown** (`SupportsPushDownRequiredColumns`):
@@ -155,7 +156,7 @@ object FixedWidthBinaryV2 {
     private var required: StructType = table.schema()
     override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
     override def build(): Scan = {
-      val splitBytes = math.max(1L, options.getLong("targetSplitBytes", 16L * 1024 * 1024))
+      val splitBytes = Option(options.get("targetSplitBytes")).map(b => math.max(1L, b.toLong))
       new FwbScan(table, required, splitBytes)
     }
   }
@@ -163,7 +164,8 @@ object FixedWidthBinaryV2 {
   private final case class FwbPartition(path: String, startByte: Long, numRecords: Long)
       extends InputPartition
 
-  private final class FwbScan(table: FwbTable, required: StructType, targetSplitBytes: Long)
+  private final class FwbScan(table: FwbTable, required: StructType,
+      targetSplitBytes: Option[Long])
       extends Scan with Batch with SupportsReportStatistics {
     private val recLen = recordLength(table.layout)
     private lazy val fileLen: Long = {
@@ -190,9 +192,19 @@ object FixedWidthBinaryV2 {
       override def numRows(): OptionalLong = OptionalLong.of(totalRecords)
     }
 
+    /** Without an explicit `targetSplitBytes`: one whole-record split
+      * per core, kept within [1 MB, 16 MB] — a small fact still spreads
+      * over every core (its map stage also carries the partial
+      * aggregate), a large one keeps bounded task sizes. */
+    private def splitBytes: Long = targetSplitBytes.getOrElse {
+      val cores = SparkSession.active.sparkContext.defaultParallelism
+      val perCore = (totalRecords + cores - 1) / cores * recLen
+      math.min(16L << 20, math.max(1L << 20, perCore))
+    }
+
     override def planInputPartitions(): Array[InputPartition] = {
       val total = totalRecords
-      val recsPerSplit = math.max(1L, targetSplitBytes / recLen)
+      val recsPerSplit = math.max(1L, splitBytes / recLen)
       val nSplits64 = (total + recsPerSplit - 1) / recsPerSplit
       // a silent .toInt wrap (huge file + tiny targetSplitBytes) would
       // plan a negative/empty split range and read NOTHING — fail loudly

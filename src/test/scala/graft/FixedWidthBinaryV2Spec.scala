@@ -58,6 +58,19 @@ class FixedWidthBinaryV2Spec extends AnyFunSuite {
     assert(df.select("a").collect().map(_.getInt(0)).sorted.toSeq === (0 until 10))
   }
 
+  test("without targetSplitBytes, splits follow the file size and the cores") {
+    assert(FWB.read(spark, path, layout).rdd.getNumPartitions === 1) // 1 MB floor
+    // 400,000 records of 12 bytes (4.8 MB): one 100,000-record split per core
+    val f = Files.createTempDirectory("fwb").resolve("big.bin").toFile
+    val out = new java.io.BufferedOutputStream(new FileOutputStream(f))
+    out.write(new Array[Byte](400000 * 12))
+    out.close()
+    val df = FWB.read(spark, f.getAbsolutePath, layout)
+    assert(spark.sparkContext.defaultParallelism === 4)
+    assert(df.rdd.getNumPartitions === 4)
+    assert(df.count() === 400000L)
+  }
+
   test("statistics report exact file size and row count to Catalyst") {
     val df = FWB.read(spark, path, layout)
     val stats = df.queryExecution.optimizedPlan.stats
