@@ -76,7 +76,8 @@ object EtlMain {
   }
 
   /** The `-l 1` twin: same answer as the default path (the staged
-    * pipeline feeds the SAME `hypercube`/`writeCsv` code, just from
+    * pipeline feeds the SAME `hypercube`/`writeCsv` code with the same
+    * broadcast gate as `fromFolder`, so it times the same plan, just from
     * pre-materialized inputs — asserted byte-identical in
     * ReferenceParitySpec), with per-stage wall times measured across
     * eager materialization boundaries. */
@@ -97,7 +98,8 @@ object EtlMain {
         .localCheckpoint(true))
     val cube = timed(2)(
       ReferenceHypercube.hypercube(cl, co,
-        ReferenceHypercube.invoices(spark, s"$dataFolder/invoices.bin"))
+        ReferenceHypercube.invoices(spark, s"$dataFolder/invoices.bin"),
+        broadcastDim = ReferenceHypercube.broadcastsDim(spark, dataFolder))
         .localCheckpoint(true))
     // t3/t4 = 0: the fused hash aggregate computed both exact
     // distincts inside t2 — see the object doc

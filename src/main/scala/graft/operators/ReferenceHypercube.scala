@@ -27,7 +27,10 @@ import graft.sources.FixedWidthBinary
   * dimension broadcast replicated; the one shuffle is on the 5-dim group
   * key whose cardinality is bounded at 3,121,200 groups
   * (`ETL.java:33-35`), so the final aggregate is tiny regardless of fact
-  * size.
+  * size. Like the reference, whose emit loop walks its dense array in
+  * index order (`ETL.java:259-264`), the packed plan gets its output
+  * order from its layout: each reducer owns a contiguous range of the
+  * group key, so no global sort is needed.
   *
   * Semantics choices (SURVEY.md §7.4):
   *   - SQL inner-join semantics: a dangling FK drops the row (the
@@ -95,9 +98,8 @@ object ReferenceHypercube {
   /** SQL-exact: `DECIMAL(10,2)` inputs, exact decimal accumulation. */
   case object SqlExact extends AmountMode
 
-  /** Broadcast-join the fact against the dim first, then ONE hash
-    * repartition on the five output dimensions, then three chained
-    * aggregation levels:
+  /** Broadcast-join the fact against the dim first, then ONE
+    * repartition on the group key, then three chained aggregation levels:
     *
     *  1. (dims, contract, client): collapses the invoice stream to one
     *     row per contract×time (client rides along — it is functionally
@@ -111,14 +113,15 @@ object ReferenceHypercube {
     * ([[graft.PartialAggregateBeforeRepartition]]): each map task ships
     * one row per level-1 key it saw instead of one per invoice — the
     * reference's thread-local partial arrays, merged at the end
-    * (`ETL.java:130-132,181-192`). The exchange's hash partitioning on
-    * the dims meets the `ClusteredDistribution` of level 1's final
-    * aggregate and of levels 2 and 3, since every grouping key is a
-    * superset of the partitioning expressions, so Catalyst adds no
-    * further exchange and the distinct counts cost no `Expand`. Empty
-    * groups never materialize: a hash aggregate creates only touched
-    * groups, where the reference filters its dense array for `!= 0`
-    * (`ETL.java:265`). */
+    * (`ETL.java:130-132,181-192`). The exchange's partitioning meets the
+    * `ClusteredDistribution` of level 1's final aggregate and of levels
+    * 2 and 3, since every grouping key contains the partitioning key, so
+    * Catalyst adds no further exchange and the distinct counts cost no
+    * `Expand`. The packed plan partitions by key range (see
+    * [[packedPlan]]) and only sorts within partitions; the generic
+    * [[chainedPlan]] hashes and sorts globally. Empty groups never
+    * materialize: a hash aggregate creates only touched groups, where
+    * the reference filters its dense array for `!= 0` (`ETL.java:265`). */
   def hypercube(clients: DataFrame, contracts: DataFrame, invoices: DataFrame,
       amountMode: AmountMode = ReferenceExact,
       broadcastDim: Boolean = false): DataFrame = {
@@ -233,8 +236,17 @@ object ReferenceHypercube {
     * dim has NULL or negative keys or the packed widths overflow a long;
     * `time` stays unpacked, so fact-side values are unconstrained.
     *
-    * The one exchange hashes (g, time); level 1's partial aggregate on
-    * (g, time, cc) runs before it, so the exchange carries at most one
+    * The one exchange is order-preserving. The packing is lexicographic,
+    * so every `g` lies in `[lo, hi]`, the packed minimum and maximum of
+    * the four dims; reducer `b = (g − lo) / width` with
+    * `width = (hi − lo) / n + 1` for `n` shuffle partitions owns a
+    * contiguous key range, and `b` is monotone in `g` and below `n`.
+    * The exchange sends each row to partition `b` directly
+    * (`repartitionById`), `b` leads every grouping key (it adds no
+    * cardinality, being a function of `g`), and a sort within each
+    * partition finishes the order: partition `i` holds only keys below
+    * those of partition `i + 1`. Level 1's partial aggregate on
+    * (b, g, time, cc) runs before the exchange, so it carries at most one
     * row per (g, time, cc) key per map task — bounded by contracts ×
     * time — rather than one row per invoice. */
   private def packedPlan(dim: DataFrame, joined: DataFrame): Option[DataFrame] = {
@@ -265,32 +277,39 @@ object ReferenceHypercube {
       .bitwiseOR(shiftleft(pk("type"), bMisc + bNature))
       .bitwiseOR(shiftleft(pk("misc"), bNature))
       .bitwiseOR(pk("nature"))
+    def packDims(d: Seq[Long]): Long =
+      d(0) << (bType + bMisc + bNature) | d(1) << (bMisc + bNature) | d(2) << bNature | d(3)
+    val (lo, hi) = (packDims(mins), packDims(maxes))
+    val parts = joined.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val width = (hi - lo) / parts + 1
     val cc = shiftleft(pk("client"), bContract).bitwiseOR(pk("contract"))
     def mask(b: Int): Long = (1L << b) - 1
     Some(joined
       .select(g.as("g"), col("time"), cc.as("cc"), col("consumption"), col("amt"))
-      .repartition(col("g"), col("time"))
-      .groupBy("g", "time", "cc")
+      .withColumn("b", expr(s"CAST((g - $lo) DIV $width AS INT)"))
+      .repartitionById(parts, col("b"))
+      .groupBy("b", "g", "time", "cc")
       .agg(
         count(lit(1)).as("pre_ninv"),
         sum("consumption").as("pre_cons"),
         sum("amt").as("pre_amt"))
-      .select(col("g"), col("time"), shiftright(col("cc"), bContract).as("ck"),
+      .select(col("b"), col("g"), col("time"), shiftright(col("cc"), bContract).as("ck"),
         col("pre_ninv"), col("pre_cons"), col("pre_amt"))
-      .groupBy("g", "time", "ck")
+      .groupBy("b", "g", "time", "ck")
       .agg(
         count(lit(1)).as("pre_ncontr"),
         sum("pre_ninv").as("pre_ninv"),
         sum("pre_cons").as("pre_cons"),
         sum("pre_amt").as("pre_amt"))
-      .groupBy("g", "time")
+      .groupBy("b", "g", "time")
       .agg(
         sum("pre_cons").as("consumption"),
         sum("pre_amt").as("amount"),
         count(lit(1)).as("nclients"),
         sum("pre_ncontr").as("ncontrats"),
         sum("pre_ninv").as("ninvoices"))
-      .orderBy("g", "time") // order-preserving packing ⇒ same order as the 5 dims
+      // partitions are key ranges in order ⇒ same order as the 5 dims
+      .sortWithinPartitions("g", "time")
       .select(
         shiftright(col("g"), bType + bMisc + bNature).cast(geoT).as("geo"),
         shiftright(col("g"), bMisc + bNature).bitwiseAND(lit(mask(bType))).cast(typeT).as("type"),
@@ -307,25 +326,27 @@ object ReferenceHypercube {
     * so a dim that outgrows memory can never OOM the executors. */
   private val BroadcastDimMaxCsvBytes = 256L * 1024 * 1024
 
+  /** Whether the contract dim of a reference-layout folder is hinted as
+    * a broadcast build side: its CSV bytes (a filesystem stat, no Spark
+    * job) are at most [[BroadcastDimMaxCsvBytes]]. */
+  def broadcastsDim(spark: SparkSession, dataFolder: String): Boolean =
+    try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      Seq(s"$dataFolder/clients.csv", s"$dataFolder/contracts.csv").map { p =>
+        val path = new org.apache.hadoop.fs.Path(p)
+        path.getFileSystem(conf).getContentSummary(path).getLength
+      }.sum <= BroadcastDimMaxCsvBytes
+    } catch { case _: java.io.IOException => false }
+
   /** End-to-end over a reference-layout data folder (`clients.csv`,
-    * `contracts.csv`, `invoices.bin` — reference `ETL.java:292-294`).
-    * The dim-broadcast decision is size-gated on the actual input file
-    * bytes (a filesystem stat, no Spark job). */
-  def fromFolder(spark: SparkSession, dataFolder: String): DataFrame = {
-    val dimBytes =
-      try {
-        val conf = spark.sparkContext.hadoopConfiguration
-        Seq(s"$dataFolder/clients.csv", s"$dataFolder/contracts.csv").map { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(conf).getContentSummary(path).getLength
-        }.sum
-      } catch { case _: java.io.IOException => Long.MaxValue }
+    * `contracts.csv`, `invoices.bin` — reference `ETL.java:292-294`),
+    * with the dim broadcast size-gated by [[broadcastsDim]]. */
+  def fromFolder(spark: SparkSession, dataFolder: String): DataFrame =
     hypercube(
       clients(spark, s"$dataFolder/clients.csv"),
       contracts(spark, s"$dataFolder/contracts.csv"),
       invoices(spark, s"$dataFolder/invoices.bin"),
-      broadcastDim = dimBytes <= BroadcastDimMaxCsvBytes)
-  }
+      broadcastDim = broadcastsDim(spark, dataFolder))
 
   /** Staged-fingerprint oracle root for q10/q11 (round-14 upgrade —
     * the q110 convention, applied to the binary fact): DuckDB cannot
@@ -367,15 +388,43 @@ object ReferenceHypercube {
     regexp_replace(format_string("%.2f", round(c, 2)), "^(-?)0\\.", "$1.")
 
   /** S4: CSV sink with the reference's header, row order and amount
-    * rendering (reference `ETL.java:254-270`). `singleFile = true`
-    * reproduces the reference's one-ordered-file contract via
-    * `coalesce(1)` — fine at reference scale, a driver bottleneck at
-    * 100 TB; `singleFile = false` keeps the global sort but writes one
-    * file per partition (rows remain totally ordered across the
-    * lexicographically-named part files). */
+    * rendering (reference `ETL.java:254-270`). The cube's partitions are
+    * written in parallel, in order: partition `i` holds only rows that
+    * sort before those of partition `i + 1` (range exchange or key-range
+    * buckets, see [[packedPlan]]). `singleFile = false` keeps one file
+    * per partition, each with a header (rows stay totally ordered across
+    * the part files in name order). `singleFile = true` reproduces the
+    * reference's one-ordered-file contract: the parts are written
+    * without headers and [[mergeParts]] concatenates them behind one. */
   def writeCsv(cube: DataFrame, outPath: String, singleFile: Boolean = true): Unit = {
     val formatted = cube.withColumn("amount", refAmountFormat(col("amount")))
-    (if (singleFile) formatted.coalesce(1) else formatted)
-      .write.mode("overwrite").option("header", "true").csv(outPath)
+    formatted.write.mode("overwrite").option("header", !singleFile).csv(outPath)
+    if (singleFile) mergeParts(cube.sparkSession, outPath, formatted.columns.mkString(","))
+  }
+
+  /** Concatenates the `part-*` files of `dir` in partition order behind
+    * one `header` line, into a `_`-prefixed temp file (which readers
+    * skip); then deletes the parts and renames the temp file to the
+    * first part's name. A merge that dies midway never leaves a partial
+    * file under a data file's name. */
+  private def mergeParts(spark: SparkSession, dir: String, header: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(root).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName.drop(5).takeWhile(_.isDigit).toLong)
+    val tmp = new Path(root, "_merged.csv")
+    val out = fs.create(tmp, true)
+    try {
+      out.write((header + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      parts.foreach { p =>
+        val in = fs.open(p)
+        try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 16, false) finally in.close()
+      }
+    } finally out.close()
+    parts.foreach(fs.delete(_, false))
+    val target = parts.head // Spark writes partition 0's file even when it is empty
+    if (!fs.rename(tmp, target)) throw new java.io.IOException(s"cannot rename $tmp to $target")
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, StructField, StructType}
@@ -80,8 +80,9 @@ object Relational {
     * @param grp  group column name
     * @param ps   (fraction, output column name) pairs
     */
-  /** Collect a BOUNDED stat frame (G×(B+3) rows at ANY corpus size) and
-    * rebuild it as a LocalRelation — the "broadcast the plan" move of
+  /** Collect a BOUNDED stat frame (G×(B+3) rows at ANY corpus size, with
+    * G checked against [[MaxPctGroups]] first) and rebuild it as a
+    * LocalRelation — the "broadcast the plan" move of
     * guide §8/§5. Round 17 persisted these frames lazily instead; the
     * cached blocks were then materialized concurrently by several AQE
     * query stages of the one consuming action ("Block rdd already
@@ -90,11 +91,15 @@ object Relational {
     * eager driver-side collect of a provably tiny frame is race-free,
     * pins no cache for the session, and embeds the rows as literals so
     * every downstream reference (and broadcast) is planning-free. */
-  private[operators] def localize(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-  }
+  private[operators] def localize(df: DataFrame): DataFrame = asLocal(df, df.collect())
+
+  private def asLocal(df: DataFrame, rows: Array[Row]): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+
+  /** Most groups [[exactPercentiles]] accepts: its cumulative histogram
+    * frame, collected into this JVM, has up to G×[[PctBuckets]] rows, so
+    * 1,024 groups bound that collect at 4 M rows. */
+  private[graft] val MaxPctGroups = 1024
 
   def exactPercentiles(base0: DataFrame, grp: String, ps: Seq[(Double, String)]): DataFrame = {
     // NULL measures are excluded up front (the quantile_cont contract);
@@ -116,8 +121,14 @@ object Relational {
     // scan they always did; `needed` derives from two LocalRelations in
     // milliseconds) and the consuming plan collapses to one scan over
     // broadcast literals per pass.
-    val stats = localize(base.groupBy(grp).agg(
-      count(lit(1)).as("n"), min("x").as("mn"), max("x").as("mx")))
+    val statsDf = base.groupBy(grp).agg(
+      count(lit(1)).as("n"), min("x").as("mn"), max("x").as("mx"))
+    val statRows = statsDf.collect()
+    // the G-row stats are local: check G×B before collecting `cum`
+    require(statRows.length <= MaxPctGroups,
+      s"exactPercentiles contract: at most $MaxPctGroups groups (G×$PctBuckets histogram " +
+        s"rows are collected locally), but `$grp` has ${statRows.length} groups")
+    val stats = asLocal(statsDf, statRows)
     // Deterministic value bucket; the min==max (or single-row) group
     // degenerates to bucket 0. x==mx lands on B and is clamped to B-1.
     val bucketed = base.join(broadcast(stats), Seq(grp))

@@ -5,15 +5,15 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[PartialAggregateBeforeRepartition]]: under `repartition(k)` with `k`
-  * among the grouping keys, the partial aggregate runs before the one
-  * exchange, with adaptive execution on and off, and the result equals
-  * the plain `groupBy`. A repartition key outside the grouping keys
-  * keeps the planner's shape. */
+/** [[PartialAggregateBeforeRepartition]]: under `repartition(k)` or
+  * `repartitionById(n, k)` with `k` among the grouping keys, the partial
+  * aggregate runs before the one exchange, with adaptive execution on and
+  * off, and the result equals the plain `groupBy`. A repartition key
+  * outside the grouping keys keeps the planner's shape. */
 class PartialAggregateBeforeRepartitionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
@@ -33,7 +33,8 @@ class PartialAggregateBeforeRepartitionSpec extends AnyFunSuite with AdaptiveSpa
   private def partials(df: DataFrame): (Int, Int) = {
     val plan = df.queryExecution.executedPlan
     val repartition = collect(plan) {
-      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => e
+      case e: ShuffleExchangeExec
+          if e.shuffleOrigin == REPARTITION_BY_COL || e.shuffleOrigin == REPARTITION_BY_NUM => e
     }
     assert(repartition.size === 1, s"expected one repartition exchange:\n$plan")
     val below = collect(repartition.head)({ case p if isPartial(p) => p }).size
@@ -54,6 +55,18 @@ class PartialAggregateBeforeRepartitionSpec extends AnyFunSuite with AdaptiveSpa
     assert(rows(df) === expected)
     assert(partials(df) === ((1, 0)), df.queryExecution.executedPlan.toString)
   }
+
+  for (aqe <- Seq(true, false))
+    test(s"partial aggregate combines before a repartitionById exchange, the only one (AQE $aqe)") {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      def keyed = input(s).withColumn("a", col("a").cast("int"))
+      val df = agg(keyed.repartitionById(7, col("a")))
+      assert(df.collect().toSet === agg(keyed).collect().toSet)
+      assert(partials(df) === ((1, 0)), df.queryExecution.executedPlan.toString)
+      val all = collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      assert(all.size === 1, df.queryExecution.executedPlan.toString)
+    }
 
   test("a distinct (no aggregate functions) combines once, below the exchange") {
     // the final aggregate of a distinct also has no functions; only its

@@ -1,65 +1,38 @@
 package graft
 
-import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream, PrintWriter}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ReferenceHypercube
 
-/** The hypercube over a generated reference-layout folder (`clients.csv`,
-  * `contracts.csv`, big-endian `invoices.bin`) with ~55 invoices per
-  * (contract, time), against a plain Spark SQL rendering of the
-  * reference's `hypercube.sql` with real `COUNT(DISTINCT)`s. Both the
+/** The hypercube over a generated reference-layout folder with ~55
+  * invoices per (contract, time), against a plain Spark SQL rendering of
+  * the reference's `hypercube.sql` with real `COUNT(DISTINCT)`s. Both the
   * packed plan (`fromFolder`) and the generic chained plan are checked,
-  * and both combine partial aggregates before their one repartition. */
+  * and both combine partial aggregates before their one repartition; the
+  * packed plan's repartition is also its only exchange, and it orders
+  * the output without a range exchange. */
 class ReferenceHypercubeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
 
-  private val rnd = new scala.util.Random(11)
-  // (id, type, geo, misc)
-  private val clients = Seq.tabulate(40)(i =>
-    (i + 1, 1 + rnd.nextInt(5), 1 + rnd.nextInt(20), 1 + rnd.nextInt(6)))
-  // (id, id_client, nature)
-  private val contracts = Seq.tabulate(90)(i =>
-    (i + 1, 1 + rnd.nextInt(clients.size), 1 + rnd.nextInt(5)))
-  // (contract, time, amount, consumption): 90 contracts × 6 times
-  private val invoices = Seq.fill(30000)(
-    (1 + rnd.nextInt(contracts.size), (1 + rnd.nextInt(6)).toByte,
-      rnd.nextInt(100000) / 100f, rnd.nextInt(2001).toShort))
-
-  private lazy val folder: String = {
-    val dir = Files.createTempDirectory("graft_hypercube").toString
-    val cw = new PrintWriter(s"$dir/clients.csv")
-    cw.println("id,type,geo,misc")
-    clients.foreach { case (id, t, g, m) => cw.println(s"$id,$t,$g,$m") }
-    cw.close()
-    val kw = new PrintWriter(s"$dir/contracts.csv")
-    kw.println("id,id_client,nature,start,end")
-    contracts.foreach { case (id, c, n) => kw.println(s"$id,$c,$n,201401,201612") }
-    kw.close()
-    // 16-byte big-endian records: id i32, contract i32, time i8,
-    // amount f32, consumption i16, pad i8
-    val out = new DataOutputStream(new BufferedOutputStream(
-      new FileOutputStream(s"$dir/invoices.bin")))
-    invoices.zipWithIndex.foreach { case ((k, t, a, c), i) =>
-      out.writeInt(i + 1); out.writeInt(k); out.writeByte(t)
-      out.writeFloat(a); out.writeShort(c); out.writeByte(0)
-    }
-    out.close()
-    dir
-  }
+  private val data = ReferenceFolder.random(seed = 11, nClients = 40, nContracts = 90,
+    nInvoices = 30000)
+  private lazy val folder: String = ReferenceFolder.write(data)
 
   /** `hypercube.sql` as written, over the generated values. */
-  private lazy val expected: Seq[Row] = {
+  private def expectedOf(d: ReferenceFolder.Data): Seq[Row] = {
     val s = spark.newSession()
     import s.implicits._
-    clients.toDF("id", "type", "geo", "misc").createOrReplaceTempView("clients")
-    contracts.toDF("id", "id_client", "nature").createOrReplaceTempView("contracts")
-    invoices.toDF("contract", "time", "amount", "consumption").createOrReplaceTempView("invoices")
+    d.clients.toDF("id", "type", "geo", "misc").createOrReplaceTempView("clients")
+    d.contracts.toDF("id", "id_client", "nature").createOrReplaceTempView("contracts")
+    d.invoices.toDF("contract", "time", "amount", "consumption").createOrReplaceTempView("invoices")
     s.sql("""
       SELECT c.geo, c.type, c.misc, k.nature, i.time,
              SUM(i.consumption) AS consumption,
@@ -74,9 +47,11 @@ class ReferenceHypercubeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       ORDER BY c.geo, c.type, c.misc, k.nature, i.time""").collect().toSeq
   }
 
+  private lazy val expected = expectedOf(data)
+
   /** Same rows in the same order: integer columns exact, the amount
     * (float32 inputs summed in double, in any order) within 1e-6. */
-  private def assertMatches(got: Seq[Row]): Unit = {
+  private def assertMatches(got: Seq[Row], expected: Seq[Row] = expected): Unit = {
     val ints = Seq(0, 1, 2, 3, 4, 5, 7, 8, 9) // every column but the amount
     assert(got.size === expected.size)
     got.zip(expected).zipWithIndex.foreach { case ((g, e), i) =>
@@ -87,21 +62,24 @@ class ReferenceHypercubeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** Records written by the executed plan's shuffles: (all, repartition). */
-  private def shuffleRecords(cube: DataFrame): (Long, Long) = {
-    val written = collect(cube.queryExecution.executedPlan) {
-      case e: ShuffleExchangeExec =>
-        (e.shuffleOrigin == REPARTITION_BY_COL, e.metrics("shuffleRecordsWritten").value)
-    }
-    (written.map(_._2).sum, written.filter(_._1).map(_._2).sum)
-  }
+  private def nonEmptyParts(cube: DataFrame): Int =
+    cube.rdd.glom().map(_.length).collect().count(_ > 0)
+
+  private def exchanges(cube: DataFrame): Seq[ShuffleExchangeExec] =
+    collect(cube.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
 
   test("fromFolder (packed plan) matches hypercube.sql and shuffles fewer " +
     "records than the fact has rows") {
     val cube = ReferenceHypercube.fromFolder(spark, folder)
+    // collect() keeps partition order: the rows arrive sorted, from
+    // several partitions
     assertMatches(cube.collect().toSeq)
-    val (all, _) = shuffleRecords(cube)
-    assert(all > 0 && all < invoices.size, s"shuffle-write records $all")
+    assert(nonEmptyParts(cube) > 1)
+    val plan = cube.queryExecution.executedPlan
+    assert(exchanges(cube).size === 1, s"expected one shuffle exchange:\n$plan")
+    assert(!exchanges(cube).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]), plan)
+    val written = exchanges(cube).head.metrics("shuffleRecordsWritten").value
+    assert(written > 0 && written < data.invoices.size, s"shuffle-write records $written")
   }
 
   test("the chained plan matches hypercube.sql and combines before its repartition") {
@@ -110,7 +88,33 @@ class ReferenceHypercubeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       ReferenceHypercube.contracts(spark, s"$folder/contracts.csv"),
       ReferenceHypercube.invoices(spark, s"$folder/invoices.bin"))
     assertMatches(cube.collect().toSeq)
-    val (_, repartition) = shuffleRecords(cube)
-    assert(repartition > 0 && repartition < invoices.size, s"repartition records $repartition")
+    val repartition = exchanges(cube).filter(_.shuffleOrigin == REPARTITION_BY_COL)
+      .map(_.metrics("shuffleRecordsWritten").value).sum
+    assert(repartition > 0 && repartition < data.invoices.size, s"repartition records $repartition")
+  }
+
+  test("a dim whose contracts all share one (geo, type, misc, nature) packs " +
+    "into one key range and still matches hypercube.sql") {
+    val d = ReferenceFolder.random(seed = 12, nClients = 10, nContracts = 20, nInvoices = 2000)
+    val one = d.copy(
+      clients = d.clients.map { case (id, _, _, _) => (id, 3, 7, 2) },
+      contracts = d.contracts.map { case (id, c, _) => (id, c, 4) })
+    val cube = ReferenceHypercube.fromFolder(spark, ReferenceFolder.write(one))
+    assertMatches(cube.collect().toSeq, expectedOf(one))
+    assert(nonEmptyParts(cube) === 1, "rows spread over more than the one bucket")
+  }
+
+  test("--stage-times writes the default path's bytes") {
+    def csvOf(dir: String): String = {
+      val parts = Files.list(Paths.get(dir)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      assert(parts.size === 1)
+      Files.readString(parts.head)
+    }
+    val outA = Files.createTempDirectory("etl-default").toString
+    val outB = Files.createTempDirectory("etl-staged").toString
+    EtlMain.run(spark, folder, outA, singleFile = true)
+    EtlMain.run(spark, folder, outB, singleFile = true, stageTimes = true)
+    assert(csvOf(outB) === csvOf(outA))
   }
 }

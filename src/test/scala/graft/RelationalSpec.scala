@@ -129,6 +129,17 @@ class RelationalSpec extends AnyFunSuite {
     assert(out.getAs[Long]("n") === 10000L) // NULLs not counted
   }
 
+  test("exact percentiles refuse more groups than their local-collect bound") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Relational
+    val many = spark.range(Relational.MaxPctGroups + 1)
+      .select(col("id").as("g"), col("id").cast("double").as("x"))
+    val e = intercept[IllegalArgumentException](
+      Relational.exactPercentiles(many, "g", Seq(0.5 -> "p50")))
+    assert(e.getMessage.contains("exactPercentiles contract: at most 1024 groups"), e.getMessage)
+    assert(e.getMessage.contains(s"${Relational.MaxPctGroups + 1} groups"), e.getMessage)
+  }
+
   test("q33 approx percentiles are within 5% of the exact sort-based q31") {
     val approx = SparkEntry.queries("q33_approx_percentiles")(spark, sf)
       .collect().map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2),

@@ -41,6 +41,71 @@ class SinkSpec extends AnyFunSuite {
     assert(keys === keys.sorted)
   }
 
+  private lazy val folder = ReferenceFolder.write(ReferenceFolder.random(
+    seed = 5, nClients = 30, nContracts = 70, nInvoices = 6000))
+
+  /** The files of `dir`, by name. */
+  private def filesOf(dir: String): Seq[String] =
+    Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+
+  /** The single-file contract as a `coalesce(1)` write of the same
+    * formatted frame produces it: the one part file's bytes. */
+  private def coalescedCsv(cube: org.apache.spark.sql.DataFrame): String = {
+    val dir = Files.createTempDirectory("graft_coalesced").toString
+    cube.withColumn("amount", ReferenceHypercube.refAmountFormat(cube("amount")))
+      .coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
+    Files.readString(Paths.get(dir, filesOf(dir).filter(_.startsWith("part-")).head))
+  }
+
+  private val header = "geo,type,misc,nature,time,consumption,amount,nclients,ncontrats,ninvoices"
+
+  /** Partitions holding rows: above 1, the merge has parts to order. */
+  private def nonEmptyParts(cube: org.apache.spark.sql.DataFrame): Int =
+    cube.rdd.glom().map(_.length).collect().count(_ > 0)
+
+  /** Writes `cube` as one file and checks it against [[coalescedCsv]]:
+    * the same bytes, one header, and nothing left of the merged parts. */
+  private def assertSingleFile(cube: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val out = Files.createTempDirectory("graft_single").toString
+    ReferenceHypercube.writeCsv(cube, out, singleFile = true)
+    val files = filesOf(out)
+    val parts = files.filter(_.startsWith("part-"))
+    assert(parts.size === 1, files)
+    assert(files.toSet === Set(parts.head, s".${parts.head}.crc", "_SUCCESS", "._SUCCESS.crc"))
+    val csv = Files.readString(Paths.get(out, parts.head))
+    assert(csv === coalescedCsv(cube))
+    val lines = csv.split("\n").toSeq
+    assert(lines.head === header && lines.count(_ == header) === 1)
+    lines
+  }
+
+  test("single-file writeCsv of the packed plan equals a coalesce(1) write, in order") {
+    val cube = ReferenceHypercube.fromFolder(spark, folder)
+    assert(nonEmptyParts(cube) > 1)
+    val lines = assertSingleFile(cube)
+    val keys = lines.drop(1).map { l =>
+      val f = l.split(","); (f(0).toInt, f(1).toInt, f(2).toInt, f(3).toInt, f(4).toInt)
+    }
+    assert(keys.size > 100 && keys === keys.sorted)
+  }
+
+  test("single-file writeCsv of the chained (range-sorted) plan equals a coalesce(1) write") {
+    // uncoalesced, so the small range-sorted output spans several parts
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val cube = ReferenceHypercube.hypercube(
+      ReferenceHypercube.clients(s, s"$folder/clients.csv"),
+      ReferenceHypercube.contracts(s, s"$folder/contracts.csv"),
+      ReferenceHypercube.invoices(s, s"$folder/invoices.bin"))
+    assert(nonEmptyParts(cube) > 1)
+    assertSingleFile(cube)
+  }
+
+  test("single-file writeCsv of an empty cube is a header-only file") {
+    val empty = ReferenceHypercube.fromFolder(spark, folder).filter("time < 0")
+    assert(assertSingleFile(empty) === Seq(header))
+  }
+
   test("refAmountFormat matches DecimalFormat('#.00') for |x| < 1") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
